@@ -19,6 +19,25 @@ from udacitycapstonedataengineer_spark.plans.star import build_star
 from udacitycapstonedataengineer_spark.sources.readers import load_tables
 from udacitycapstonedataengineer_spark.sources.writers import write_parquet
 
+CAL_PARTS = ["arrival_year", "arrival_month", "arrival_week"]
+
+# Spark jobs one ``run_pipeline`` starts on the sf0.001 fixtures in the
+# test session (local[4], 4 shuffle partitions). The count is fixed at
+# fixed data, so an added eager action (a stray count() or collect())
+# fails test_pipeline_job_budget without any wall-clock measurement.
+JOB_BUDGET = 33
+
+
+def _group_jobs(spark, group: str, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` starts, run under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        return sorted(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("", "")
+
 
 def test_star_pipeline_roundtrip(spark, sf_dir, tmp_path):
     star = build_star(load_tables(spark, sf_dir))
@@ -49,6 +68,91 @@ def test_star_pipeline_roundtrip(spark, sf_dir, tmp_path):
 
     fact_back = spark.read.parquet(fact_path)
     assert fact_back.count() == star["fact"].count()
+
+
+def test_partitioned_sink_one_file_per_dir_on_every_slot(spark, sf_dir, tmp_path):
+    """The calendar dim arrives in ONE partition (global row_number
+    window). Its partitioned sink must still write exactly one file per
+    (year, month, week) directory, hold the built rows, write from more
+    than one task, and keep partition pruning at the source."""
+    cal = build_star(load_tables(spark, sf_dir))["calendar_dim"]
+    path = tmp_path / "calendar_dim"
+    ids = _group_jobs(
+        spark,
+        "calendar_sink",
+        lambda: write_parquet(cal, str(path), partition_by=CAL_PARTS),
+    )
+
+    files = list(path.rglob("*.parquet"))
+    dirs = [f.parent for f in files]
+    assert len(dirs) == len(set(dirs)) == cal.select(*CAL_PARTS).distinct().count()
+    assert all(d.relative_to(path).parts[0].startswith("arrival_year=") for d in dirs)
+
+    back = spark.read.parquet(str(path)).select(*cal.columns)
+    assert sorted(back.collect()) == sorted(cal.collect())
+
+    # the write job (the group's last) ran its stage on several slots
+    tracker = spark.sparkContext.statusTracker()
+    write_tasks = max(
+        tracker.getStageInfo(sid).numCompletedTasks
+        for sid in tracker.getJobInfo(ids[-1]).stageIds
+    )
+    if spark.sparkContext.defaultParallelism > 1:
+        assert write_tasks > 1, write_tasks
+
+    one_year = spark.read.parquet(str(path)).filter(F.col("arrival_year") == 1995)
+    assert one_year.count() > 0
+    plan = one_year._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [isnotnull(arrival_year" in plan
+
+
+def test_pipeline_metrics_match_unfused_counts(spark, sf_dir, tmp_path):
+    """run_pipeline's single aggregate returns, key for key and in
+    order, what row_accounting + check_star return, and writes every
+    sink."""
+    from udacitycapstonedataengineer_spark.operators.cleaning import (
+        drop_nulls,
+        row_accounting,
+    )
+    from udacitycapstonedataengineer_spark.plans.pipeline import run_pipeline
+
+    got = run_pipeline(spark, sf_dir, str(tmp_path))
+    tables = load_tables(spark, sf_dir)
+    orders = drop_nulls(tables["orders"], subset=["o_orderkey", "o_orderdate"])
+    want = row_accounting(tables["orders"], orders)
+    want.update(check_star(build_star({**tables, "orders": orders})))
+    assert list(got.items()) == list(want.items())
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        ["priority_dim", "country_dim", "calendar_dim", "fact"]
+    )
+
+
+def test_pipeline_gates_raise_before_any_sink(spark, sf_dir, tmp_path, monkeypatch):
+    """An empty star table fails the fused gate with the same
+    QualityError as assert_nonempty, and no sink directory is made."""
+    from udacitycapstonedataengineer_spark.plans import pipeline
+
+    def star_with_empty_dim(tables):
+        star = build_star(tables)
+        return {**star, "country_dim": star["country_dim"].limit(0)}
+
+    monkeypatch.setattr(pipeline, "build_star", star_with_empty_dim)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(QualityError, match=r"empty output tables: \['country_dim'\]"):
+        pipeline.run_pipeline(spark, sf_dir, str(tmp_path / "out"))
+    assert not (tmp_path / "out").exists()
+    # ...and the cached source is released
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_pipeline_job_budget(spark, sf_dir, tmp_path):
+    """Every Spark job run_pipeline starts, counted in one job group."""
+    from udacitycapstonedataengineer_spark.plans.pipeline import run_pipeline
+
+    ids = _group_jobs(
+        spark, "pipeline_budget", lambda: run_pipeline(spark, sf_dir, str(tmp_path))
+    )
+    assert len(ids) == JOB_BUDGET, f"{len(ids)} jobs, budget {JOB_BUDGET}"
 
 
 def test_row_accounting(spark, sf_dir):

@@ -1,4 +1,5 @@
-"""CSV readers (S2/S3), partitioned-writer reuse, and the salted join."""
+"""CSV readers (S2/S3), partitioned-writer reuse, the salted join and
+the small-input spread guard."""
 
 from __future__ import annotations
 
@@ -489,3 +490,31 @@ def test_aqe_skew_join_split_fires_at_runtime(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_spread_small_input_guard(spark, monkeypatch):
+    """``spread_small_input`` hash-clusters a small frame on all its
+    keys across every slot, and returns a frame whose driver-side size
+    estimate is above the guard as the SAME object (the partitioned
+    sink reads that identity as "write it as given"). The guard's
+    threshold is lowered so the small frame counts as large."""
+    from udacitycapstonedataengineer_spark.operators import skew
+
+    par = spark.sparkContext.defaultParallelism
+    df = spark.range(64).select(
+        (F.col("id") % 4).alias("a"), (F.col("id") % 3).alias("b"), "id"
+    )
+    spread = skew.spread_small_input(df, "a", "b")
+    assert spread is not df
+    assert spread.rdd.getNumPartitions() == par
+    # rows with equal keys share one partition
+    owners = (
+        spread.select("a", "b", F.spark_partition_id().alias("p"))
+        .groupBy("a", "b")
+        .agg(F.countDistinct("p").alias("n"))
+    )
+    assert owners.filter(F.col("n") > 1).count() == 0
+    assert sorted(spread.collect()) == sorted(df.collect())
+
+    monkeypatch.setattr(skew, "_SPREAD_BYTES_PER_SLOT", 1)
+    assert skew.spread_small_input(df, "a", "b") is df

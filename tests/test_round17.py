@@ -202,6 +202,7 @@ def test_recall_at_k_fused_matches_loop(spark, sf_dir):
     from udacitycapstonedataengineer_spark.operators.ivfpq import (
         ivfpq_build,
         ivfpq_topk,
+        ivfpq_topk_multi,
     )
     from udacitycapstonedataengineer_spark.operators.recall_eval import (
         exact_topk_multi,
@@ -237,4 +238,10 @@ def test_recall_at_k_fused_matches_loop(spark, sf_dir):
         ref.append((q, hits, hits / float(k)))
     assert got == ref
     sch = {f.name: f.dataType.simpleString() for f in fused.schema.fields}
-    assert sch == {"query_vec_id": "int", "hits": "bigint", "recall": "double"}
+    # query_vec_id carries a vec_id, so it has vec_id's type — in the
+    # fused probe's output as well as in the per-query result
+    assert sch == {"query_vec_id": "bigint", "hits": "bigint", "recall": "double"}
+    top = ivfpq_topk_multi(
+        index, cents, books, [(q, id_rows[q]) for q in qids], nprobe, k
+    )
+    assert top.schema["query_vec_id"].dataType == emb.schema["vec_id"].dataType

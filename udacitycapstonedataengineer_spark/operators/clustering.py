@@ -68,6 +68,13 @@ def model_rows(model) -> list:
     # round-trip loses the trainer-attached rows, and its consumers
     # (probes, encodes, drift) would otherwise re-run the collect —
     # a full driver action each — once per call site.
+    # Scope: the memo lives exactly as long as the Python DataFrame
+    # object. It is never shared — a derived frame (``model.select``)
+    # or a fresh read of the same path collects again — and never
+    # invalidated: a frame over files rewritten in place keeps
+    # returning the rows of its first collect. Models are immutable
+    # once trained, so only callers that rewrite a model's files and
+    # keep using the old frame object can see stale rows.
     try:
         model._graft_rows = rows
     except AttributeError:  # exotic DataFrame proxies — stay pure

@@ -376,7 +376,7 @@ def ivfpq_topk_multi(
                 )
             )
     luts = index.sparkSession.createDataFrame(
-        lut_rows, "query_vec_id int, cell bigint, __lut array<double>"
+        lut_rows, "query_vec_id bigint, cell bigint, __lut array<double>"
     )
     w = Window.partitionBy("query_vec_id").orderBy("adc_dist2", "vec_id")
     return (

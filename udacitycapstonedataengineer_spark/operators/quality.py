@@ -4,11 +4,13 @@ The reference's quality_checks (etl_functions.py:136-147) prints
 "NOK" per empty table and always returns 0 — nothing fails. Here the
 gates RAISE, return their evidence as data, and run as few Spark jobs
 as possible: FK coverage is one broadcast anti-join count, not a
-per-key loop; all-table row counts come from one action per table on
-the already-cached pipeline outputs.
+per-key loop; the pipeline's row accounting, all-table row counts and
+FK count come from one aggregate action (``check_pipeline``).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -18,12 +20,50 @@ class QualityError(AssertionError):
     """A quality gate failed; message carries the metric evidence."""
 
 
-def assert_nonempty(tables: dict[str, DataFrame]) -> dict[str, int]:
-    """Q1: every output table must have rows. Returns the counts."""
-    counts = {name: df.count() for name, df in tables.items()}
+def _raise_if_empty(counts: dict[str, int]) -> None:
     empty = [name for name, n in counts.items() if n == 0]
     if empty:
         raise QualityError(f"empty output tables: {empty} (counts={counts})")
+
+
+def _raise_if_unresolved(unresolved: int, fact_key: str, dim_key: str) -> None:
+    if unresolved:
+        raise QualityError(
+            f"{unresolved} fact rows have {fact_key} not present in dim.{dim_key}"
+        )
+
+
+def unresolved_fk_rows(
+    fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str
+) -> DataFrame:
+    """Fact rows whose non-null FK has no match in the dim: one
+    broadcast LEFT ANTI join, no fact shuffle."""
+    return fact.filter(F.col(fact_key).isNotNull()).join(
+        F.broadcast(dim.select(F.col(dim_key).alias(fact_key)).distinct()),
+        fact_key,
+        "left_anti",
+    )
+
+
+def count_all(frames: dict[str, DataFrame]) -> dict[str, int]:
+    """Row count of every frame in ONE aggregate action: a tagged union
+    whose conditional counts partial-aggregate map-side and meet in a
+    single reduce (the operators/graph.py triangle-count pattern), in
+    place of one ``count()`` job — and one driver round-trip — each."""
+    tagged = reduce(
+        DataFrame.unionAll,
+        [df.select(F.lit(i).alias("__t")) for i, df in enumerate(frames.values())],
+    )
+    row = tagged.agg(
+        *[F.count(F.when(F.col("__t") == i, 1)) for i in range(len(frames))]
+    ).head()
+    return dict(zip(frames, row))
+
+
+def assert_nonempty(tables: dict[str, DataFrame]) -> dict[str, int]:
+    """Q1: every output table must have rows. Returns the counts."""
+    counts = {name: df.count() for name, df in tables.items()}
+    _raise_if_empty(counts)
     return counts
 
 
@@ -33,19 +73,8 @@ def fk_coverage(
     """Every non-null fact FK must resolve in the dim (the check the
     reference never made — its left joins silently null the key).
     One broadcast LEFT ANTI join; no fact shuffle."""
-    unresolved = (
-        fact.filter(F.col(fact_key).isNotNull())
-        .join(
-            F.broadcast(dim.select(F.col(dim_key).alias(fact_key)).distinct()),
-            fact_key,
-            "left_anti",
-        )
-        .count()
-    )
-    if unresolved:
-        raise QualityError(
-            f"{unresolved} fact rows have {fact_key} not present in dim.{dim_key}"
-        )
+    unresolved = unresolved_fk_rows(fact, dim, fact_key, dim_key).count()
+    _raise_if_unresolved(unresolved, fact_key, dim_key)
     return {"unresolved_fks": unresolved}
 
 
@@ -55,6 +84,31 @@ def check_star(star: dict[str, DataFrame]) -> dict[str, int]:
     metrics = assert_nonempty(star)
     metrics.update(fk_coverage(star["fact"], star["priority_dim"], "priority_key", "priority_key"))
     return metrics
+
+
+def check_pipeline(
+    source: DataFrame, cleaned: DataFrame, star: dict[str, DataFrame]
+) -> dict[str, int]:
+    """``row_accounting(source, cleaned)`` plus ``check_star(star)`` —
+    the same metrics, the same gates, the same errors — from ONE
+    aggregate action (``count_all``) instead of seven ``count()`` actions."""
+    orphans = unresolved_fk_rows(
+        star["fact"], star["priority_dim"], "priority_key", "priority_key"
+    )
+    counts = count_all(
+        {"rows_before": source, "rows_after": cleaned, **star, "unresolved_fks": orphans}
+    )
+    tables = {name: counts[name] for name in star}
+    _raise_if_empty(tables)
+    _raise_if_unresolved(counts["unresolved_fks"], "priority_key", "priority_key")
+    before, after = counts["rows_before"], counts["rows_after"]
+    return {
+        "rows_before": before,
+        "rows_after": after,
+        "rows_dropped": before - after,
+        **tables,
+        "unresolved_fks": counts["unresolved_fks"],
+    }
 
 
 # ---- declarative expectations ---------------------------------------------

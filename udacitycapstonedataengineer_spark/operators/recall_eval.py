@@ -150,7 +150,7 @@ def ivfpq_recall_at_k(
     # a query whose probed cells hold zero eligible rows must still
     # report hits=0, exactly as the per-query loop's global agg did
     qdf = index.sparkSession.createDataFrame(
-        [(int(q),) for q in query_ids], "query_vec_id int"
+        [(int(q),) for q in query_ids], "query_vec_id bigint"
     )
     return (
         qdf.join(hits, "query_vec_id", "left")

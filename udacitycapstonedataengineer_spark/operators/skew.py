@@ -25,21 +25,23 @@ from pyspark.sql import functions as F
 _SPREAD_BYTES_PER_SLOT = 64 << 20
 
 
-def spread_small_input(df: DataFrame, key: str) -> DataFrame:
-    """Hash-repartition a PARALLELISM-STARVED input on a deterministic
-    high-cardinality key (guide §2.5/§2.6): a one-split scan (or a
-    small derived table the planner will broadcast around) serializes
-    any expensive per-row stage — interpreted cosine folds, Python
-    codecs — onto one core while the rest of the cluster idles.
+def spread_small_input(df: DataFrame, *keys: str) -> DataFrame:
+    """Hash-repartition a PARALLELISM-STARVED input on deterministic
+    keys (guide §2.5/§2.6): a one-split scan (or a small derived table
+    the planner will broadcast around) serializes any expensive per-row
+    stage — interpreted cosine folds, Python codecs, one file per
+    partition directory of a sink — onto one core while the rest of the
+    cluster idles. Rows with equal ``keys`` land in the same partition.
 
     The guard is a DRIVER-ONLY logical-plan size estimate
     (``optimizedPlan().stats().sizeInBytes`` — no job, no AQE stage
     materialization; an ``rdd.getNumPartitions()`` probe here was
     measured re-executing the whole upstream pipeline once per call
     under AQE, PERF_NOTES r16 wave 2). Inputs estimated larger than
-    defaultParallelism × 64 MB are returned untouched — at scale the
-    spread is a no-op by construction, and mis-estimates err toward
-    not spreading (never incorrect, only unspread)."""
+    defaultParallelism × 64 MB are returned untouched, as the same
+    object (callers may test identity) — at scale the spread is a no-op
+    by construction, and mis-estimates err toward not spreading (never
+    incorrect, only unspread)."""
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     try:
@@ -50,7 +52,7 @@ def spread_small_input(df: DataFrame, key: str) -> DataFrame:
         return df
     if size > par * _SPREAD_BYTES_PER_SLOT:
         return df
-    return df.repartition(par, key)
+    return df.repartition(par, *keys)
 
 
 def salted_join(

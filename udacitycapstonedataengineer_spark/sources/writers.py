@@ -11,6 +11,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..operators.skew import spread_small_input
+
+# parquet page size for SMALL partitioned sinks. parquet-mr allocates
+# page-sized buffers per column for every file it opens (default page
+# 1 MB), however few rows the file holds. With one file per partition
+# directory written on every slot at once, those buffers — not the
+# data — grew the driver's committed heap (calendar dim, 412 files,
+# local[4] on a 4-vCPU VM: 390 → 611 MB at 1 MB pages, 390 MB at
+# 64 KB). A small file's pages are far below 64 KB, so the bytes on
+# disk do not change.
+_SMALL_SINK_PAGE_BYTES = 64 << 10
+
 
 def write_parquet(
     df: DataFrame,
@@ -18,9 +30,27 @@ def write_parquet(
     partition_by: list[str] | None = None,
     mode: str = "overwrite",
 ) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
+    """``df`` as parquet under ``path``, optionally hive-partitioned.
+
+    A partitioned sink writes one file per partition directory from
+    the task that holds the directory's rows. A small input that
+    arrives in one partition (a dim behind a global window) would write
+    every directory from one task, paying the per-file costs — directory
+    and file permission calls (a ``chmod`` process each when Hadoop's
+    native library is absent), writer set-up — serially. Such an input
+    is hash-clustered on the partition columns across all slots
+    (``skew.spread_small_input``: a driver-only size estimate, no job),
+    so every directory still gets exactly one file but the directories
+    are written in parallel, with page buffers sized for small files.
+    An input above the spread threshold is written exactly as given.
+    """
+    if not partition_by:
+        df.write.mode(mode).parquet(path)
+        return
+    spread = spread_small_input(df, *partition_by)
+    writer = spread.write.mode(mode).partitionBy(*partition_by)
+    if spread is not df:
+        writer = writer.option("parquet.page.size", _SMALL_SINK_PAGE_BYTES)
     writer.parquet(path)
 
 
