@@ -251,3 +251,81 @@ def test_ivfpq_index_drift_moves_on_shift(spark, sf_dir):
     assert any(
         base[c]["batch_n"] != moved[c]["batch_n"] for c in base
     ) or moved_energy > base_energy
+
+
+def test_double_array_bit_identical_to_lit_path(spark):
+    """Model and query literals ship as ONE SQL-text array
+    (``clustering.double_array``) instead of one ``F.lit`` call per
+    double. Both forms must collect to the same bits: the ADC LUT's
+    +inf sentinel, signed zero, ``1e-05``-style reprs, float32
+    values upcast to double (every embedding), and the extremes."""
+    import struct
+
+    from pyspark.sql import functions as F
+
+    from udacitycapstonedataengineer_spark.operators.clustering import (
+        double_array,
+    )
+
+    values = [
+        float("inf"),
+        float("-inf"),
+        -0.0,
+        0.0,
+        1e-05,
+        -1.52587890625e-05,
+        float(np.float32(0.1)),
+        float(np.float32(-1 / 3)),
+        5e-324,
+        1.7976931348623157e308,
+        123456789.123,
+    ]
+    [row] = spark.range(1).select(
+        double_array(values).alias("sql"),
+        F.array(*[F.lit(float(x)) for x in values]).alias("lit"),
+    ).collect()
+
+    def bits(xs):
+        return [struct.pack("<d", x) for x in xs]
+
+    assert bits(row["sql"]) == bits(row["lit"]) == bits(values)
+
+
+# Spark jobs of one warm run (query construction + a noop write) at
+# sf0.001. Deterministic for a fixed plan and data, so an added driver
+# action fails here without a timing canary. Both include the 2 jobs
+# the trainers' spread input adds: its first action, the seed fetch,
+# also materializes the exchange.
+JOB_BUDGET = {"ann_topk_ivfpq": 11, "semdedup_survivors": 54}
+
+
+def test_model_build_job_budget_and_class_reuse(spark, sf_dir):
+    """Job budgets for the two model-building queries, and codegen
+    class reuse across a pass: after ann → semdedup, a second ann
+    compiles NO new classes (CodegenMetrics counts every cache miss).
+    With Spark's 100-entry default cache, the ~170 classes of one
+    pass evicted each other and every pass recompiled them all."""
+    from udacitycapstonedataengineer_spark.plans.queries import QUERIES
+
+    sc = spark.sparkContext
+    compiles = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run(name: str, group: str) -> tuple[int, int]:
+        c0 = compiles.getCount()
+        sc.setJobGroup(group, group)
+        try:
+            QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup("", "")
+        return jobs, compiles.getCount() - c0
+
+    run("ann_topk_ivfpq", "budget-ann-warm")
+    run("semdedup_survivors", "budget-semdedup-warm")
+    jobs, compiled = run("ann_topk_ivfpq", "budget-ann")
+    assert compiled == 0, f"second ann_topk_ivfpq compiled {compiled} classes"
+    assert jobs == JOB_BUDGET["ann_topk_ivfpq"], jobs
+    jobs, _ = run("semdedup_survivors", "budget-semdedup")
+    assert jobs == JOB_BUDGET["semdedup_survivors"], jobs

@@ -334,8 +334,11 @@ def test_kmeans_assign_matches_window_reference(spark, sf_dir):
         .collect()
     }
     assert got == want
+    # the plan check reads a plain scan: the trained ``vectors`` carry
+    # kmeans_fit's input spread (one Exchange, materialized with the
+    # cache), which is not part of the assignment
     plan = (
-        kmeans_assign(vectors, centroids)
+        kmeans_assign(_as_double_vec(emb, "embedding"), centroids)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -492,13 +492,20 @@ def test_aqe_skew_join_split_fires_at_runtime(spark):
                 spark.conf.set(k, v)
 
 
-def test_spread_small_input_guard(spark, monkeypatch):
+def test_spread_small_input_guard(spark, sf_dir, monkeypatch):
     """``spread_small_input`` hash-clusters a small frame on all its
     keys across every slot, and returns a frame whose driver-side size
     estimate is above the guard as the SAME object (the partitioned
     sink reads that identity as "write it as given"). The guard's
-    threshold is lowered so the small frame counts as large."""
+    threshold is lowered so the small frame counts as large. The
+    model trainers persist their double vectors through it: a
+    one-split corpus trains on every slot, and above the guard the
+    vectors keep the input's single partition."""
     from udacitycapstonedataengineer_spark.operators import skew
+    from udacitycapstonedataengineer_spark.operators.clustering import (
+        kmeans_fit,
+    )
+    from udacitycapstonedataengineer_spark.operators.ivfpq import ivfpq_build
 
     par = spark.sparkContext.defaultParallelism
     df = spark.range(64).select(
@@ -516,5 +523,19 @@ def test_spread_small_input_guard(spark, monkeypatch):
     assert owners.filter(F.col("n") > 1).count() == 0
     assert sorted(spread.collect()) == sorted(df.collect())
 
+    emb = load_table(spark, sf_dir, "embeddings").coalesce(1)
+    vectors, _ = kmeans_fit(emb, k=2, iters=1)
+    assert vectors.rdd.getNumPartitions() == par
+    vectors.unpersist()
+    _, _, index = ivfpq_build(emb, nlist=2, m=8, k=4, iters=1)
+    assert index.rdd.getNumPartitions() == par
+    index.unpersist()
+
     monkeypatch.setattr(skew, "_SPREAD_BYTES_PER_SLOT", 1)
     assert skew.spread_small_input(df, "a", "b") is df
+    vectors, _ = kmeans_fit(emb, k=2, iters=1)
+    assert vectors.rdd.getNumPartitions() == 1
+    vectors.unpersist()
+    _, _, index = ivfpq_build(emb, nlist=2, m=8, k=4, iters=1)
+    assert index.rdd.getNumPartitions() == 1
+    index.unpersist()

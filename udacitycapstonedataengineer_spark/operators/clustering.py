@@ -28,8 +28,12 @@ the row_number-window Exchange the pre-r16 shape paid (guide §2.4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .skew import spread_small_input
 
 SCALE = 1 << 20  # fixed-point quantum for centroid accumulation
 
@@ -42,8 +46,6 @@ def quantize_vec_py(vec) -> list[float]:
     seed tables can be quantized without a Spark action — every
     collect of even an 8-row local relation costs ~0.5 s of pure
     plan/py4j overhead (guide §1: measured, PERF_NOTES r16)."""
-    import math
-
     return [float(math.floor(float(x) * SCALE)) / SCALE for x in vec]
 
 
@@ -87,11 +89,44 @@ _DIST2 = (
 )
 
 
+def _double_sql(x) -> str:
+    """SQL text of one DOUBLE literal that parses back to the same bits:
+    ``repr`` round-trips every finite double exactly (and ``-0.0D``
+    folds to -0.0); non-finite values, e.g. the ADC LUT's +inf
+    sentinel, go through an explicit string cast."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    return f"CAST('{x}' AS DOUBLE)"
+
+
+def double_array_sql(values) -> str:
+    """SQL text of an ``array<double>`` literal over ``values``."""
+    return "array(" + ",".join(_double_sql(x) for x in values) + ")"
+
+
+def double_array(values) -> Column:
+    """``array<double>`` literal column, bit-identical to
+    ``F.array(*[F.lit(float(x)) for x in values])`` but parsed from
+    ONE SQL string: the per-element form costs a py4j round trip per
+    double (~0.5 ms each — hundreds per model or query vector)."""
+    return F.expr(double_array_sql(values))
+
+
 def _as_double_vec(emb: DataFrame, vec_col: str) -> DataFrame:
     return emb.select(
         "vec_id",
         F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("v"),
     )
+
+
+def training_vectors(emb: DataFrame, vec_col: str) -> DataFrame:
+    """(vec_id, v array<double>), persisted for a trainer's seed fetch
+    and Lloyd rounds. Spread on vec_id first: a one-split corpus would
+    run every round in one task. Above ``spread_small_input``'s size
+    guard the input is planned as given; the models are bit-identical
+    either way (seeds by vec_id, order-free BIGINT sums)."""
+    return spread_small_input(_as_double_vec(emb, vec_col), "vec_id").persist()
 
 
 def _quantize_vec(col: str) -> str:
@@ -145,8 +180,7 @@ def centroid_assign_expr(centroid_rows: list, vec_col: str = "v"):
         )
     entries = []
     for r in sorted(centroid_rows, key=lambda r: r["cid"]):
-        c = "array(" + ",".join(f"{float(x)!r}D" for x in r["c"]) + ")"
-        d2 = _DIST2.format(v=vec_col, c=c)
+        d2 = _DIST2.format(v=vec_col, c=double_array_sql(r["c"]))
         entries.append(f"struct({d2} AS dist2, {int(r['cid'])}L AS cid)")
     return F.expr(f"array_min(array({','.join(entries)}))").getField("cid")
 
@@ -224,7 +258,7 @@ def kmeans_fit(
     # persisted: consumed by the seed fetch, every iteration's
     # assign + re-aggregation join, and the final assign — without it
     # each consumer re-scans (and re-decodes) the embedding parquet
-    vectors = _as_double_vec(emb, vec_col).persist()
+    vectors = training_vectors(emb, vec_col)
     # init = first k vectors by id RANK (not `vec_id < k`, which
     # silently under-seeds on sparse/offset ids — ADVICE r2). One
     # driver action fetches the k×dim seed table, validates the

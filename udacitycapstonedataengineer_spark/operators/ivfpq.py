@@ -31,7 +31,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .coarse import centroid_array, coarse_fit_from_vectors
-from .clustering import centroid_assign_expr, model_rows
+from .clustering import (
+    centroid_assign_expr,
+    double_array,
+    model_rows,
+    training_vectors,
+)
 from .pq import pq_codes_expr, pq_train
 
 
@@ -64,12 +69,7 @@ def ivfpq_build(
     from .clustering import kmeans  # noqa: F401  (doc pointer)
 
     spark = emb.sparkSession
-    vectors = emb.select(
-        "vec_id",
-        F.expr(
-            f"transform({vec_col}, x -> cast(x as double))"
-        ).alias("v"),
-    ).persist()
+    vectors = training_vectors(emb, vec_col)
     # coarse quantizer: seeds + iterations exactly as clustering.kmeans
     cent_rows = coarse_fit_from_vectors(vectors, nlist, iters, "ivfpq_build")
     centroids = spark.createDataFrame(
@@ -94,6 +94,9 @@ def ivfpq_build(
         .persist()
     )
     codebooks = pq_train(residuals, m=m, k=k, iters=iters)
+    # pq_train's seed scan materialized residuals: nothing reads the
+    # double vectors any more
+    vectors.unpersist()
     book_rows = model_rows(codebooks)  # attached at construction
     # persisted: ivfpq_topk filters the index once PER PROBED CELL —
     # in production the index is a written table, so the persist
@@ -237,9 +240,7 @@ def ivfpq_topk(
     dsub = len(cb[0]["c"])
     lut_expr = None
     for cell in probed:
-        arr = F.array(
-            *[F.lit(x) for x in _cell_lut(q, cents[cell], cb, m, k, dsub)]
-        )
+        arr = double_array(_cell_lut(q, cents[cell], cb, m, k, dsub))
         lut_expr = (
             arr
             if lut_expr is None
@@ -416,7 +417,7 @@ def ivfpq_topk_refined(
     shortlist = ivfpq_topk(
         index, coarse_centroids, codebooks, query, nprobe, topk=rerank
     ).select("vec_id")
-    qlit = F.array(*[F.lit(float(x)) for x in query])
+    qlit = double_array(query)
     dist2 = F.expr(
         "aggregate(zip_with(v, qv, (x, y) -> (x - y) * (x - y)),"
         " 0D, (acc, w) -> acc + w)"

@@ -30,7 +30,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .clustering import SCALE
+from .clustering import SCALE, double_array, double_array_sql
 
 _DIST2 = (
     "aggregate(zip_with({v}, {c}, (x, y) -> (x - y) * (x - y)),"
@@ -79,8 +79,7 @@ def _sub_argmin_sql(vec_sql: str, book_rows: list) -> str:
     ``stream_ivfpq_encode`` shape, now the batch primitive too)."""
     entries = []
     for r in book_rows:
-        c = "array(" + ",".join(f"{float(x)!r}D" for x in r["c"]) + ")"
-        d2 = _DIST2.format(v=vec_sql, c=c)
+        d2 = _DIST2.format(v=vec_sql, c=double_array_sql(r["c"]))
         entries.append(f"struct({d2} AS dist2, {int(r['cid'])} AS cid)")
     return f"array_min(array({','.join(entries)})).cid"
 
@@ -266,7 +265,7 @@ def pq_adc_topk(
         for a, b in zip(qs, r["c"]):
             d2 += (float(a) - float(b)) * (float(a) - float(b))
         lut[r["sub"], r["cid"]] = d2
-    flat = F.array(*[F.lit(float(x)) for x in lut.reshape(-1)])
+    flat = double_array(lut.reshape(-1))
     # element_at is 1-based in Spark SQL: sub s's code is
     # element_at(codes, s+1); its LUT slot is s*k + code (0-based)
     dist = F.expr(

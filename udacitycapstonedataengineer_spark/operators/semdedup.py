@@ -80,7 +80,9 @@ def semdedup_pairs(
     recover the embedding column the window had dropped. The pair
     join on the cluster id (the Σ|cell|² stage) is unchanged — that
     is the operator's inherent cost."""
-    _vectors, centroids = kmeans_fit(emb, k=k, iters=iters, dim=dim)
+    vectors, centroids = kmeans_fit(emb, k=k, iters=iters, dim=dim)
+    # the model is collected; the pairs below re-read ``emb`` itself
+    vectors.unpersist()
     cent_rows = model_rows(centroids)
     v = (
         emb.withColumn(
@@ -140,7 +142,8 @@ def semdedup_incremental_pairs(
     only. A daily ingest shuffles its own rows; the 100 TB corpus
     contributes only its (vec_id, cluster) assignment — in production
     a persisted table, exactly like the standing MinHash band index."""
-    _vectors, centroids = kmeans_fit(corpus, k=k, iters=iters, dim=dim)
+    vectors, centroids = kmeans_fit(corpus, k=k, iters=iters, dim=dim)
+    vectors.unpersist()  # the model is collected (see semdedup_pairs)
     cent_rows = model_rows(centroids)
 
     def _assigned(side: DataFrame) -> DataFrame:

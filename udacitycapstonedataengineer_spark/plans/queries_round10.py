@@ -41,7 +41,7 @@ from ..operators.clustering import (
     kmeans_fit,
     kmeans_oracle_parts,
 )
-from ..operators.coarse import centroid_array, coarse_argmin, ivfpq_coarse_fit
+from ..operators.coarse import centroid_array, ivfpq_coarse_fit
 from ..operators.graph import connected_components
 from ..operators.ivfpq import (
     _ivfpq_oracle_parts,
@@ -250,7 +250,7 @@ def ivfpq_drift_stats(emb, centroids, batch_where: str = _BATCH_WHERE):
     ``ivfpq_index_drift``, factored so tests can feed shifted batches.
     ``centroids`` is the FROZEN coarse quantizer (cid, c) — collected
     (model-sized, nlist×dim) so assignment + residual run as ONE
-    map-only pass over corpus+batch (``coarse_argmin``); the only
+    map-only pass over corpus+batch (``centroid_assign_expr``); the only
     corpus-grain shuffles left are the two cell-grain aggregates. The
     previous shape paid a nlist·N row_number window plus an N⋈N
     join-back for the same numbers."""
@@ -270,7 +270,7 @@ def ivfpq_drift_stats(emb, centroids, batch_where: str = _BATCH_WHERE):
     # through every fold step and evaluated the fold twice)
     carr = centroid_array(cent_rows)
     assigned = vectors.select(
-        "vec_id", "v", coarse_argmin(cent_rows)["cid"].alias("cell")
+        "vec_id", "v", centroid_assign_expr(cent_rows).alias("cell")
     )
     ren = assigned.select(
         "vec_id",
@@ -496,11 +496,13 @@ def semdedup_incremental_survivors(corpus, batch, k, iters, dim, threshold):
     one batch×survivors-per-cell join, and a closure over BATCH pairs
     only (``test_semdedup_incremental_survivors_standing_tables``
     proves the persisted-standing-tables path ≡ this recompute)."""
-    _vectors, centroids = kmeans_fit(corpus, k=k, iters=iters, dim=dim)
+    vectors, centroids = kmeans_fit(corpus, k=k, iters=iters, dim=dim)
     # the standing model is already materialized (kmeans_fit returns a
-    # local relation backed by the collected k×dim rows); the member
-    # table stays persisted — the pair self-join, survivor anti-join
-    # and batch decision all scan it
+    # local relation backed by the collected k×dim rows), so the
+    # training vectors are released; the member table stays
+    # persisted — the pair self-join, survivor anti-join and batch
+    # decision all scan it
+    vectors.unpersist()
     cent_rows = model_rows(centroids)
     # spread before persist (guide §2.5/§2.6): a one-split embedding
     # scan would cache the member table as ONE partition and the pair

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.clustering import double_array
 from ..operators.ivfpq import (
     ivfpq_build,
     ivfpq_oracle_sql,
@@ -61,7 +62,7 @@ def _ann_topk_ivfpq(spark, t):
     top = ivfpq_topk(
         index, cents, books, q, nprobe=_NPROBE, topk=_TOPK
     )
-    qlit = F.array(*[F.lit(x) for x in q])
+    qlit = double_array(q)
     exact = (
         emb.select(
             "vec_id",

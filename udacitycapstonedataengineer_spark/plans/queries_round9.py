@@ -33,6 +33,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..operators.graph import connected_components
+from ..operators.clustering import double_array
 from ..operators.ivfpq import (
     ivfpq_build,
     ivfpq_encode_batch,
@@ -48,7 +49,7 @@ from .registry import query
 def _exact_topk_flags(emb, q, topk):
     """(vec_id, in_exact_topk=true) for the exact-L2 top ``topk`` —
     the recall-contract column every IVF-PQ query carries."""
-    qlit = F.array(*[F.lit(x) for x in q])
+    qlit = double_array(q)
     return (
         emb.select(
             "vec_id",

@@ -41,6 +41,13 @@ _DEFAULTS = {
     "spark.sql.maxPlanStringLength": str(1024 * 1024),
     # …and bound how many of those the live UI holds.
     "spark.sql.ui.retainedExecutions": "50",
+    # Keep generated classes across queries. One IVF-PQ + SemDeDup
+    # pass compiles ~170 classes, more than the 100-entry default
+    # holds, so every pass recompiled all of them (~1.5 s of janino
+    # plus JIT warm-up). Model literals fold into the classes'
+    # references, so the cache serves repeated query SHAPES, not only
+    # identical models. Static: read once, at session start.
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 
